@@ -122,7 +122,7 @@ def main() -> None:
         pagerank,
         trustrank,
     )
-    from readur_spark.plans.curation import _release_checkpoint as _release
+    from readur_spark.operators.lifecycle import release_checkpoint as _release
     from readur_spark.session import get_spark
 
     spark = get_spark(app_name="readur_spark_linkgraph")

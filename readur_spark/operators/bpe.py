@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from readur_spark.kernels.bpe import BpeTokenizer, train_bpe, word_counts
+from readur_spark.operators.lifecycle import release_checkpoint
 
 
 def word_count_table(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -224,15 +225,11 @@ def train_bpe_spark_loop(
             nxt = words.localCheckpoint(eager=True)
             # free the superseded checkpoint's executor blocks; nxt no
             # longer references them (its lineage was truncated)
-            from readur_spark.plans.curation import _release_checkpoint
-
-            _release_checkpoint(last_ckpt)
+            release_checkpoint(last_ckpt)
             words = last_ckpt = nxt
     # the function returns only the plain merges list — release the final
     # word-table checkpoint too (round-5 review: it leaked otherwise)
-    from readur_spark.plans.curation import _release_checkpoint
-
-    _release_checkpoint(last_ckpt)
+    release_checkpoint(last_ckpt)
     if stats is not None:
         # counting passes = job barriers paid; the observable proving the
         # batch amortization (one-job-per-merge would pay len(merges))

@@ -14,7 +14,11 @@ ch.3), implemented Spark-first:
   (bit arithmetic over token hashes), Arrow-batched;
 * skew controls: document-frequency cap on shingles (a stopword shingle
   appearing in every doc would otherwise produce a quadratic join blowup),
-  AQE skew-join on, and band-hash bucketing for LSH.
+  AQE skew-join on, and band-hash bucketing for LSH;
+* an intermediate that a later plan reads more than once is an eager
+  ``localCheckpoint`` (computed once, and the later plan starts from a
+  leaf), released through :mod:`readur_spark.operators.lifecycle` as soon
+  as it is dead.
 """
 
 from __future__ import annotations
@@ -28,6 +32,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from readur_spark.functions.textstats import fingerprint_col
+from readur_spark.operators.lifecycle import release_checkpoint
 
 # --------------------------------------------------------------------------
 # Exact dedup (D1/D2/D4 parity)
@@ -62,15 +67,19 @@ def dedup_keep_first(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
 # --------------------------------------------------------------------------
 
 
-def _token_rows(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, pos, tk): one row per token in document order. Tokenization =
-    lowercase + split on non-alnum runs (engine-portable so the DuckDB
-    oracle can reproduce it exactly)."""
-    tokens = F.filter(
+def _tokens(text_col: str):
+    """Token array of a text column. Tokenization = lowercase + split on
+    non-alnum runs (engine-portable so the DuckDB oracle can reproduce it
+    exactly)."""
+    return F.filter(
         F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"), lambda t: t != ""
     )
+
+
+def _token_rows(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, pos, tk): one row per token in document order."""
     return _ensure_parallelism(docs).select(
-        F.col(id_col).alias("id"), F.posexplode(tokens).alias("pos", "tk")
+        F.col(id_col).alias("id"), F.posexplode(_tokens(text_col)).alias("pos", "tk")
     )
 
 
@@ -92,32 +101,41 @@ def _ensure_parallelism(df: DataFrame) -> DataFrame:
     shuffle outputs already carry ``spark.sql.shuffle.partitions``-level
     parallelism."""
     try:
-        sc = df.sparkSession.sparkContext
-        target = sc.defaultParallelism
+        spark = df.sparkSession
+        target = spark.sparkContext.defaultParallelism
         files = df.inputFiles()
         if not files or len(files) >= target:
             return df
-        conf = sc._jsc.hadoopConfiguration()
-        jvm = sc._jvm
-        try:
-            max_bytes = int(
-                df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes")
-                .lower()
-                .rstrip("b")
-            )
-        except (TypeError, ValueError):
-            max_bytes = 128 * 1024 * 1024
-        splits = 0
-        for f in files:
-            p = jvm.org.apache.hadoop.fs.Path(f)
-            fs = p.getFileSystem(conf)
-            size = fs.getFileStatus(p).getLen()
-            splits += max(1, -(-size // max_bytes))
-            if splits >= target:
-                return df
+        if _input_splits(spark, files, target) >= target:
+            return df
         return df.repartition(target)
     except Exception:
         return df
+
+
+def _max_partition_bytes(spark) -> int:
+    """``spark.sql.files.maxPartitionBytes`` in bytes, parsed by the
+    session's SQLConf — so unit suffixes (``128m``, ``1g``) mean what
+    they mean to the file scan itself."""
+    return int(spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
+
+
+def _input_splits(spark, files: list[str], stop_at: int) -> int:
+    """Split count of ``files`` at maxPartitionBytes (each file at least
+    one split), from driver FileSystem status calls only. Counting stops
+    once it reaches ``stop_at``."""
+    sc = spark.sparkContext
+    conf = sc._jsc.hadoopConfiguration()
+    jvm = sc._jvm
+    max_bytes = _max_partition_bytes(spark)
+    splits = 0
+    for f in files:
+        p = jvm.org.apache.hadoop.fs.Path(f)
+        size = p.getFileSystem(conf).getFileStatus(p).getLen()
+        splits += max(1, -(-size // max_bytes))
+        if splits >= stop_at:
+            break
+    return splits
 
 
 def _shingles(
@@ -126,35 +144,35 @@ def _shingles(
     """Word n-gram shingles per document: (id, shingle), distinct per doc
     by default (Jaccard is over shingle SETS).
 
-    Built relationally — posexplode the tokens once, then ``lead()`` over a
-    per-doc window. The former array formulation (transform over indices
-    with slice()/element_at into the tokens expression) re-evaluated the
-    whole tokenization per element — higher-order-function lambdas are
-    interpreted with NO common-subexpression elimination, so a 200k-token
-    mega document went quadratic and hung for hours. The window form is
-    linear, codegen'd, and shuffles once on the doc id (skew = one task
-    per mega doc, which is exactly the scan parallelism anyway).
+    Built from the token array without a shuffle: the tokens are computed
+    once per document (a projection of their own), then the n-grams are
+    the rows of ``arrays_zip`` over ``n`` shifted ``slice``s of that array,
+    exploded and joined by ``concat_ws``. Linear in document length and
+    codegen'd. No lambda indexes into the tokens: a ``transform`` over
+    indices would re-evaluate the whole tokenization per element
+    (higher-order-function lambdas get NO common-subexpression
+    elimination), which makes a 200k-token mega document quadratic. A
+    ``lead()`` window is linear as well, but costs a shuffle and a sort
+    on the doc id before the consumer's own aggregation.
 
     ``distinct=False`` skips the de-dup shuffle for consumers that are
-    multiset-safe (MinHash: min over a multiset equals min over the set)."""
-    rows = _token_rows(docs, id_col, text_col)
+    multiset-safe (MinHash: min over a multiset equals min over the set;
+    the LSH verifier's ``collect_set``)."""
+    toks = _ensure_parallelism(docs).select(
+        F.col(id_col).alias("id"), _tokens(text_col).alias("tk")
+    )
     if n == 1:
-        sh = rows.select("id", F.col("tk").alias("shingle"))
+        sh = toks.select("id", F.explode("tk").alias("shingle"))
     else:
-        w = Window.partitionBy("id").orderBy("pos")
-        parts = [F.col("tk")] + [F.lead("tk", j).over(w) for j in range(1, n)]
-        # concat_ws SKIPS nulls — the tail rows with missing leads would
-        # silently emit (n-1)-grams, so gate on the last lead instead
-        sh = (
-            rows.select(
-                "id",
-                F.when(parts[-1].isNotNull(), F.concat_ws(" ", *parts)).alias(
-                    "shingle"
-                ),
-            )
-            .where(F.col("shingle").isNotNull())
-        )
-    sh = sh.where(F.col("shingle") != "")
+        # each slice holds the tokens at offset j of every n-gram; a
+        # document shorter than n yields empty slices and no rows
+        grams = F.greatest(F.size("tk") - (n - 1), F.lit(0))
+        sh = toks.select(
+            "id",
+            F.explode(
+                F.arrays_zip(*[F.slice("tk", j + 1, grams).alias(f"t{j}") for j in range(n)])
+            ).alias("g"),
+        ).select("id", F.concat_ws(" ", *[F.col("g")[f"t{j}"] for j in range(n)]).alias("shingle"))
     return sh.distinct() if distinct else sh
 
 
@@ -174,48 +192,6 @@ def _materialize_release(result: DataFrame, *cached: DataFrame) -> DataFrame:
     for df in cached:
         df.unpersist()
     return out
-
-
-def _jaccard_for_pairs(
-    sh: DataFrame, pairs: DataFrame, threshold: float
-) -> DataFrame:
-    """Exact Jaccard restricted to an EXPLICIT (id_a, id_b) pair list —
-    the verifier for capped candidate generation. Instead of the
-    postings self-join (which regenerates every co-occurring pair from
-    each shingle's postings list, O(group^2) per shingle on
-    mass-duplicated corpora), explode each pair to its left side's
-    shingles and count matches on the uniform (id_b, shingle) key:
-    linear in pairs × shingles-per-doc. Pairs with zero intersection
-    fall out of the count join — they cannot pass any threshold > 0."""
-    sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
-    left = pairs.join(sh.withColumnRenamed("id", "id_a"), "id_a")
-    inter = (
-        left.join(
-            sh.select(F.col("id").alias("id_b"), "shingle"),
-            ["id_b", "shingle"],
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    return (
-        inter.join(
-            sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"),
-            "id_a",
-        )
-        .join(
-            sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"),
-            "id_b",
-        )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
 
 
 def _jaccard_from_shingles(
@@ -428,10 +404,14 @@ def minhash_lsh_pairs(
     """
     assert num_hashes % bands == 0
     rows_per_band = num_hashes // bands
-    # one shingle+agg pass for the signatures (nothing else consumes the
-    # exploded table anymore — verification shingles only the candidates).
-    # Persisted because the band self-join consumes sig on BOTH sides.
-    sig = minhash_signatures(docs, num_hashes, n, id_col, text_col).persist()
+    # Every intermediate is an EAGER localCheckpoint, so each later plan
+    # starts from a leaf and nothing is computed twice (a lazy persist()
+    # read by several plans, or on both sides of the band self-join, is
+    # rebuilt by every AQE job that reads it before it is materialized).
+    # Each dead checkpoint is released once its consumer is materialized.
+    sig = minhash_signatures(docs, num_hashes, n, id_col, text_col).localCheckpoint(
+        eager=True
+    )
     band_cols = [
         F.xxhash64(
             F.lit(b), *[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
@@ -454,7 +434,7 @@ def minhash_lsh_pairs(
         tagged = (
             stacked.withColumn("bsz", F.count("*").over(wb))
             .withColumn("bmin", F.min("id").over(wb))
-            .persist()
+            .localCheckpoint(eager=True)
         )
         small = tagged.filter(F.col("bsz") <= max_bucket_size).select(
             "id", "band_no", "band_val"
@@ -473,9 +453,8 @@ def minhash_lsh_pairs(
             # hub = bucket min, so id_a < id_b holds by construction
             .select(F.col("bmin").alias("id_a"), F.col("id").alias("id_b"))
         )
-        candidates = pair_small.union(pair_star).distinct().cache()
-        candidates.count()  # materialize before releasing the window pass
-        tagged.unpersist()
+        candidates = pair_small.union(pair_star).distinct().localCheckpoint(eager=True)
+        release_checkpoint(tagged)
     else:
         x = stacked.alias("x")
         y = stacked.alias("y")
@@ -484,42 +463,51 @@ def minhash_lsh_pairs(
             .where(F.col("x.id") < F.col("y.id"))
             .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
             .distinct()
-        ).cache()
-    # exact verification restricted to candidate DOCUMENTS only: semi-join
-    # the corpus down to candidate ids and shingle JUST those (the LSH is
-    # selective, so this explodes a few hundred docs instead of the whole
-    # corpus — the full-corpus shingle pass is gone entirely), then the
-    # usual inverted-index intersection with exact per-doc set sizes
+        ).localCheckpoint(eager=True)
+    release_checkpoint(sig)
+    # exact verification restricted to the candidate PAIRS: semi-join the
+    # corpus down to candidate ids and shingle just those documents (the
+    # LSH is selective — a few hundred docs, not the corpus), collect each
+    # one's shingle SET (collect_set is multiset-safe, so no distinct
+    # shuffle; for n > 1 the shingle window already hash-partitioned by
+    # id, so the aggregate adds no exchange either), then score every
+    # candidate with one array_intersect. Linear in pairs x shingles-per-
+    # doc on both branches: no postings self-join, whose O(replicas^2)
+    # rows per shingle on a mass-duplicated corpus are exactly the blow-up
+    # the bucket cap removes from candidate generation. Zero-intersection
+    # pairs are dropped explicitly, so they stay out even at threshold 0.
     cand_ids = (
-        candidates.select(F.col("id_a").alias("id"))
-        .union(candidates.select(F.col("id_b").alias("id")))
+        candidates.select(F.col("id_a").alias(id_col))
+        .union(candidates.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
-    cand_docs = docs.join(
-        F.broadcast(cand_ids.withColumnRenamed("id", id_col)), id_col, "left_semi"
+    cand_docs = docs.join(F.broadcast(cand_ids), id_col, "left_semi")
+    sets = (
+        _shingles(cand_docs, id_col, text_col, n, distinct=False)
+        .groupBy("id")
+        .agg(F.collect_set("shingle").alias("s"))
     )
-    sh = _shingles(cand_docs, id_col, text_col, n)
-    if max_bucket_size is not None:
-        # pair-restricted verification: the postings self-join inside
-        # _jaccard_from_shingles regenerates ALL co-occurring pairs from
-        # each shingle's postings list — O(replicas^2) rows per shingle
-        # on a mass-duplicated corpus, which is exactly the blow-up the
-        # bucket cap removed from candidate generation (measured: the
-        # 500k-doc funnel spends >25 min there after the cap without
-        # this). Instead, explode each CANDIDATE pair to its left-side
-        # shingles and count matches on the (id_b, shingle) join —
-        # linear in pairs x shingles-per-doc.
-        result = _jaccard_for_pairs(sh, candidates, threshold)
-    else:
-        exact = _jaccard_from_shingles(sh, threshold)
-        result = candidates.join(exact, ["id_a", "id_b"]).select(
-            "id_a", "id_b", "jaccard"
+    inter = F.size(F.array_intersect("s_a", "s_b"))
+    result = (
+        candidates.join(sets.select(F.col("id").alias("id_a"), F.col("s").alias("s_a")), "id_a")
+        .join(sets.select(F.col("id").alias("id_b"), F.col("s").alias("s_b")), "id_b")
+        .select(
+            "id_a",
+            "id_b",
+            inter.alias("inter"),
+            F.size("s_a").alias("sz_a"),
+            F.size("s_b").alias("sz_b"),
         )
-    # eager-materialize the (small) pair list and release the cached
-    # intermediates — without this, repeated calls in one session leak
-    # storage blocks and pin shuffle files (round-2 judge: 4.75→9.47→13.2 s
-    # monotonic slowdown on identical runs)
-    return _materialize_release(result, sig, candidates)
+        .filter(F.col("inter") > 0)
+        .withColumn(
+            "jaccard",
+            F.round(F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 6),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    ).localCheckpoint(eager=True)
+    release_checkpoint(candidates)
+    return result
 
 
 # --------------------------------------------------------------------------
@@ -618,13 +606,6 @@ def simhash_pairs(
 # --------------------------------------------------------------------------
 # Embedding cosine near-dup
 # --------------------------------------------------------------------------
-
-
-def _cosine(a, b):
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v)
-    na = F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda s, v: s + v))
-    nb = F.sqrt(F.aggregate(F.transform(b, lambda x: x * x), F.lit(0.0), lambda s, v: s + v))
-    return dot / (na * nb)
 
 
 def embedding_dup_pairs(
@@ -802,8 +783,16 @@ def connected_components(
 ) -> DataFrame:
     """Connected components over a near-dup pair list by iterative min-label
     propagation (the standard distributed formulation; converges in
-    O(cluster diameter) rounds — near-dup clusters are shallow, so this is
-    2-4 rounds in practice, each one join + one map-side-combining groupBy).
+    O(cluster diameter) rounds — near-dup clusters are shallow, so only a
+    few rounds run in practice).
+
+    The labels are seeded with one aggregate, ``least(id, min(neighbour))``
+    per node — exactly what a first round from identity labels would
+    compute, so the seed counts as one of the ``max_iter`` rounds. Each
+    round is then one join + one map-side-combining groupBy for the
+    neighbour minimum and one id join to fold it in; the round's
+    checkpoint carries a ``moved`` flag, so convergence is a filter-count
+    over that checkpoint, not a join of the new labels against the old.
 
     Returns (id, component) where component = min id in the cluster.
     Only ids that appear in ``pairs`` are returned (singletons are their
@@ -837,22 +826,27 @@ def connected_components(
     edges = _truncate(
         fwd.union(fwd.select(F_.col("dst").alias("src"), F_.col("src").alias("dst")))
     )
+    # `least` skips nulls; a null id never matches the id joins below, so
+    # it keeps a null label, as an identity seed would
     labels = _truncate(
-        edges.select(F_.col("src").alias("id")).distinct().withColumn("lbl", F_.col("id"))
+        edges.groupBy(F_.col("src").alias("id"))
+        .agg(F_.min("dst").alias("nlbl"))
+        .select(
+            "id",
+            F_.when(F_.col("id").isNotNull(), F_.least("id", "nlbl")).alias("lbl"),
+        )
     )
     # release discipline: each round's truncation leaves a persisted
-    # block; without freeing the PREVIOUS round's labels, an
+    # block; without freeing the PREVIOUS round's checkpoint, an
     # O(diameter)-round run on a big host graph accumulates diameter
     # copies of the label table in executor storage (found by the
-    # 10^7-edge linkgraph probe, r7). Reliable-checkpoint mode relies
+    # 10^7-edge linkgraph probe). Reliable-checkpoint mode relies
     # on ContextCleaner + checkpoint-dir cleanup instead.
     def _release(df: DataFrame) -> None:
         if checkpoint_dir is None:
-            from readur_spark.plans.curation import _release_checkpoint
+            release_checkpoint(df)
 
-            _release_checkpoint(df)
-
-    for _ in range(max_iter):
+    for _ in range(max_iter - 1):
         neighbor_min = (
             edges.join(labels, edges["dst"] == labels["id"])
             .groupBy(F_.col("src").alias("nid"))
@@ -862,14 +856,10 @@ def connected_components(
             labels.join(neighbor_min, labels["id"] == neighbor_min["nid"], "left").select(
                 "id",
                 F_.least(F_.col("lbl"), F_.coalesce(F_.col("nlbl"), F_.col("lbl"))).alias("lbl"),
+                F_.coalesce(F_.col("nlbl") < F_.col("lbl"), F_.lit(False)).alias("moved"),
             )
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F_.col("n.lbl") != F_.col("o.lbl"))
-            .count()
-        )
+        changed = new_labels.filter(F_.col("moved")).count()
         _release(labels)
         labels = new_labels
         if changed == 0:

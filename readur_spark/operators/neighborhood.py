@@ -43,6 +43,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from readur_spark.operators.lifecycle import release_checkpoint
+
 
 def _alpha(m: int) -> float:
     """Standard HLL bias-correction constant."""
@@ -129,8 +131,6 @@ def hyperball(
         raise ValueError(
             f"num_partitions must be >= 1, got {num_partitions}"
         )
-    from readur_spark.plans.curation import _release_checkpoint
-
     m = 1 << p
     spark = edges.sparkSession
     e = edges.select(
@@ -344,7 +344,7 @@ def hyperball(
         old_ck = cur_ck
         cur_ck = new_sketches
         sketches = new_sketches.drop("changed")
-        _release_checkpoint(old_ck)
+        release_checkpoint(old_ck)
         round_walls.append(round(_time.perf_counter() - _t0, 3))
         if stats is not None:
             stats["rounds_run"] = t
@@ -361,14 +361,14 @@ def hyperball(
     # before returning: without this, the caller's handle keeps the
     # full register storage pinned through whatever runs next, and
     # releasing a bare select() of a checkpoint is a documented no-op
-    # in _release_checkpoint (r8 review finding)
+    # in release_checkpoint
     result = sketches.select(
         "node",
         F.col("est").alias("reach_est"),
         F.col("harm").alias("harmonic"),
         F.col("t_conv").alias("t_converged"),
     ).localCheckpoint(eager=True)
-    _release_checkpoint(cur_ck)
+    release_checkpoint(cur_ck)
     return result
 
 

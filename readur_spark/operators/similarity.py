@@ -13,6 +13,8 @@ import random
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from readur_spark.operators.lifecycle import release_checkpoint
+
 
 def _as_lit_array(vec: list[float]):
     return F.array(*[F.lit(float(x)) for x in vec])
@@ -372,7 +374,6 @@ def semdedup(
         return embeddings.withColumn("oversized_split", F.lit(False))
 
     from readur_spark.operators.dedup import _materialize_release
-    from readur_spark.plans.curation import _release_checkpoint
 
     assigned, _cents = ivf_assign(
         embeddings, n_centroids=n_clusters, seed=seed,
@@ -389,7 +390,7 @@ def semdedup(
     def _discard(frame, is_ckpt: bool) -> None:
         # release a superseded backing frame (cache or checkpoint blocks)
         if is_ckpt:
-            _release_checkpoint(frame)
+            release_checkpoint(frame)
         else:
             frame.unpersist()
 
@@ -550,5 +551,5 @@ def semdedup(
             )
         )
     out = out.localCheckpoint(eager=True)
-    _release_checkpoint(pruned)
+    release_checkpoint(pruned)
     return out

@@ -23,13 +23,8 @@ language — the layout downstream training-data samplers prune on.
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-_log = logging.getLogger(__name__)
-_release_warned = False
 
 from readur_spark.functions.textstats import (
     gopher_flags_cols,
@@ -38,42 +33,7 @@ from readur_spark.functions.textstats import (
 )
 from readur_spark.operators import dedup
 from readur_spark.operators.extract import chunk_texts, extract_spans
-
-
-def _release_checkpoint(df: DataFrame) -> None:
-    """Free a localCheckpointed frame's storage blocks deterministically —
-    ContextCleaner would otherwise wait on driver GC + py4j finalization,
-    which lets executor storage accumulate across repeated curate() calls
-    in a long-lived session. A released frame CANNOT be recomputed (the
-    checkpoint truncated its lineage), so this is only ever called on dead
-    intermediates, never on the returned frame.
-
-    Failure is OBSERVABLE, not swallowed silently (ADVICE r4): if a future
-    Spark version stops analyzing a localCheckpointed frame to a
-    LogicalRDD, the executor-storage leak this call exists to prevent
-    would return undetected under a bare ``except: pass``. A one-time
-    warning names the plan class so the regression shows up in logs, and
-    tests/test_curation.py::test_curate_releases_stage_checkpoints pins
-    the block count across repeated curate() calls."""
-    global _release_warned
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        cls = plan.getClass().getSimpleName()
-        if cls != "LogicalRDD":
-            if not _release_warned:
-                _release_warned = True
-                _log.warning(
-                    "checkpoint release no-op: analyzed plan is %s, not "
-                    "LogicalRDD — executor storage will be GC-freed only; "
-                    "update _release_checkpoint for this Spark version",
-                    cls,
-                )
-            return
-        plan.rdd().unpersist(False)
-    except Exception as exc:  # GC-driven cleanup remains the fallback
-        if not _release_warned:
-            _release_warned = True
-            _log.warning("checkpoint release failed (%s); relying on GC", exc)
+from readur_spark.operators.lifecycle import release_checkpoint
 
 
 def _to_text(docs_df: DataFrame) -> DataFrame:
@@ -452,7 +412,7 @@ def curate(
     # (later stages like scrub_pii only WRAP it without re-checkpointing,
     # so an identity check against `curated` would release the live frame)
     for df in stage_frames[:-1]:
-        _release_checkpoint(df)
+        release_checkpoint(df)
     return chunks, metrics
 
 

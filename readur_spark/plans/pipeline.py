@@ -297,17 +297,20 @@ def _drop_staged_input(
     if table_format == "iceberg":
         spark.sql(f"DROP TABLE IF EXISTS {staged}")
     else:
-        # drop ALL _staged_p* siblings, not only the current partition
+        # drop ALL _staged_p<N> siblings, not only the current partition
         # count: a resume with a different num_partitions would otherwise
         # orphan the previous corpus-sized snapshot forever (r8 advisor
         # finding). Hadoop FS for the same cluster-correctness reason as
-        # the existence probe above.
+        # the existence probe above. Names are matched literally over a
+        # listing of the parent, never globbed: `[`, `{` or `*` in the
+        # checkpoint path would make a glob miss our own snapshots and
+        # match — and recursively delete — a sibling directory.
         try:
-            fs, _, jvm = _hadoop_fs(spark, checkpoint_path)
-            pat = jvm.org.apache.hadoop.fs.Path(
-                f"{checkpoint_path}_staged_p*"
-            )
-            for st in fs.globStatus(pat) or []:
-                fs.delete(st.getPath(), True)
+            fs, path, _ = _hadoop_fs(spark, checkpoint_path)
+            prefix = path.getName() + "_staged_p"
+            for st in fs.listStatus(path.getParent()) or []:
+                name = st.getPath().getName()
+                if name.startswith(prefix) and name[len(prefix):].isdigit():
+                    fs.delete(st.getPath(), True)
         except Exception:
             pass  # cleanup is best-effort; a leftover snapshot is inert

@@ -267,12 +267,12 @@ def test_curate_releases_stage_checkpoints(spark):
 
 
 def test_release_checkpoint_frees_blocks_and_warns_on_foreign_plan(spark, caplog):
-    """_release_checkpoint must actually free a checkpointed frame's
+    """release_checkpoint must actually free a checkpointed frame's
     storage, and must WARN (not silently no-op) when handed a frame whose
     analyzed plan is not a LogicalRDD (ADVICE r4 observability)."""
     import logging
 
-    import readur_spark.plans.curation as cur
+    import readur_spark.operators.lifecycle as lc
 
     sc = spark.sparkContext
 
@@ -283,19 +283,19 @@ def test_release_checkpoint_frees_blocks_and_warns_on_foreign_plan(spark, caplog
     base = n_persistent()
     ck = df.localCheckpoint(eager=True)
     assert n_persistent() == base + 1
-    cur._release_checkpoint(ck)
+    lc.release_checkpoint(ck)
     assert n_persistent() == base
 
     # a non-checkpointed frame analyzes to Range/Project, not LogicalRDD:
     # the release must decline loudly exactly once
-    cur._release_warned = False
-    with caplog.at_level(logging.WARNING, logger="readur_spark.plans.curation"):
-        cur._release_checkpoint(df)
-        cur._release_checkpoint(df)  # second call: warning already issued
+    lc._release_warned = False
+    with caplog.at_level(logging.WARNING, logger="readur_spark.operators.lifecycle"):
+        lc.release_checkpoint(df)
+        lc.release_checkpoint(df)  # second call: warning already issued
     warnings = [r for r in caplog.records if "checkpoint release" in r.message]
     assert len(warnings) == 1
     assert "LogicalRDD" in warnings[0].message
-    cur._release_warned = False  # leave global state clean for other tests
+    lc._release_warned = False  # leave global state clean for other tests
 
 
 def test_funnel_token_mode_chunks_decode_exact(spark, docs):

@@ -660,3 +660,192 @@ def test_minhash_bucket_cap_star_expansion(spark):
         ).collect()
     )
     assert a == b
+
+
+# --------------------------------------------------------------------------
+# MinHash-LSH verification and connected-components convergence
+# --------------------------------------------------------------------------
+
+
+def _near_dup_corpus(spark):
+    """Five families of eight edited copies (a bucket cap of 3 splits
+    them into star pairs) plus twenty unrelated documents — Jaccard
+    values spread from ~0.1 to 1.0."""
+    import random
+
+    rng = random.Random(11)
+    vocab = [f"w{i}" for i in range(300)]
+    rows = []
+    for fam in range(5):
+        base = [rng.choice(vocab) for _ in range(40)]
+        for v in range(8):
+            words = list(base)
+            for _ in range(v * 3):
+                words[rng.randrange(len(words))] = rng.choice(vocab)
+            rows.append((fam * 100 + v, " ".join(words)))
+    for i in range(20):
+        rows.append((1000 + i, " ".join(rng.choice(vocab) for _ in range(40))))
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _lsh_candidates(sig, bands, rows_per_band, cap):
+    """Band-collision candidates, recomputed in Python from the signature
+    table: all pairs inside buckets of at most ``cap`` members, hub-star
+    pairs (bucket minimum vs every other member) in larger buckets."""
+    from collections import defaultdict
+
+    buckets = defaultdict(list)
+    for r in sig.collect():
+        for b in range(bands):
+            key = tuple(r[f"h{b * rows_per_band + i}"] for i in range(rows_per_band))
+            buckets[(b, key)].append(r["id"])
+    cand = set()
+    for ids in buckets.values():
+        ids = sorted(ids)
+        if cap is None or len(ids) <= cap:
+            cand |= {(a, c) for i, a in enumerate(ids) for c in ids[i + 1 :]}
+        else:
+            cand |= {(ids[0], c) for c in ids[1:]}
+    return cand
+
+
+@pytest.mark.parametrize("cap", [None, 3])
+@pytest.mark.parametrize("threshold", [0.0, 0.5])
+def test_minhash_pairs_equal_exact_jaccard_on_candidates(spark, cap, threshold):
+    """Verification is exact: the output is the exact n-gram Jaccard pair
+    list restricted to the LSH candidates, on both the all-pairs and the
+    bucket-capped branch. At threshold 0 no zero-intersection pair
+    appears."""
+    docs = _near_dup_corpus(spark)
+    sig = dedup.minhash_signatures(docs, num_hashes=16, n=2)
+    cand = _lsh_candidates(sig, bands=8, rows_per_band=2, cap=cap)
+    exact = {
+        (r.id_a, r.id_b): r.jaccard
+        for r in dedup.ngram_jaccard_pairs(docs, threshold=threshold, n=2).collect()
+    }
+    got = {
+        (r.id_a, r.id_b): r.jaccard
+        for r in dedup.minhash_lsh_pairs(
+            docs, threshold=threshold, num_hashes=16, bands=8, n=2,
+            max_bucket_size=cap,
+        ).collect()
+    }
+    assert got == {p: j for p, j in exact.items() if p in cand}
+    assert all(j > 0 for j in got.values())
+    assert any(j < 0.5 for j in got.values()) == (threshold == 0.0)
+
+
+def test_connected_components_long_path_and_string_ids(spark):
+    """Min-label propagation over a path of 11 hops (edges given in mixed
+    direction) and over string ids: every node gets its component's
+    minimum id, however many rounds that takes."""
+    edges = [(i, i + 1) if i % 2 else (i + 1, i) for i in range(11)]
+    pairs = spark.createDataFrame(edges + [(50, 40)], "id_a long, id_b long")
+    comp = {r["id"]: r["component"] for r in dedup.connected_components(pairs).collect()}
+    assert comp == {**{i: 0 for i in range(12)}, 40: 40, 50: 40}
+
+    names = [f"n{i:02d}" for i in range(8)]
+    spairs = spark.createDataFrame(
+        [(names[i + 1], names[i]) for i in range(7)] + [("zz", "yy")],
+        "id_a string, id_b string",
+    )
+    scomp = {
+        r["id"]: r["component"] for r in dedup.connected_components(spairs).collect()
+    }
+    assert scomp == {**{n: "n00" for n in names}, "yy": "yy", "zz": "yy"}
+
+
+def _n_persistent(sc):
+    """Persistent RDD count once the async ContextCleaner has settled
+    (two consecutive reads agree)."""
+    import time
+
+    prev = None
+    for _ in range(10):
+        sc._jvm.System.gc()
+        time.sleep(0.5)
+        cur = sc._jsc.getPersistentRDDs().size()
+        if cur == prev:
+            return cur
+        prev = cur
+    return cur
+
+
+def test_near_dup_checkpoints_stay_flat_across_calls(spark):
+    """Every per-round / per-stage checkpoint is released: repeated calls
+    each leave only their returned frame's blocks behind (a leak would add
+    one block per round — ~11 on this path graph)."""
+    sc = spark.sparkContext
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(11)], "id_a long, id_b long")
+    docs = _near_dup_corpus(spark)
+    kept = []
+    base = _n_persistent(sc)
+    for _ in range(2):
+        kept.append(dedup.connected_components(pairs))
+    after_cc = _n_persistent(sc)
+    for cap in (None, 3):
+        kept.append(dedup.minhash_lsh_pairs(docs, threshold=0.5, n=2, max_bucket_size=cap))
+    after_lsh = _n_persistent(sc)
+    assert after_cc - base <= 2, (base, after_cc)
+    assert after_lsh - after_cc <= 2, (after_cc, after_lsh)
+
+
+@pytest.mark.parametrize("cap,max_jobs", [(None, 13), (3, 15)])
+def test_minhash_pairs_computes_each_intermediate_once(spark, cap, max_jobs):
+    """The input is read exactly twice per call — once for the signatures,
+    once for the candidate documents' shingle sets (an unpersisted
+    intermediate read N times re-reads it N times; the lazily cached form
+    read it five times) — and one call stays within 13 Spark jobs (15 with
+    the bucket cap, whose window pass is one more checkpoint; the lazily
+    cached form submitted 30 and 28)."""
+    sc = spark.sparkContext
+    base = _near_dup_corpus(spark).localCheckpoint(eager=True)
+    n_docs = base.count()
+    reads = sc.accumulator(0)
+
+    def tap(batches):
+        for pdf in batches:
+            reads.add(len(pdf))
+            yield pdf
+
+    docs = base.mapInPandas(tap, schema=base.schema)
+    group = f"minhash-job-count-{cap}"
+    sc.setJobGroup(group, "minhash_lsh_pairs job-count guard")
+    try:
+        dedup.minhash_lsh_pairs(docs, threshold=0.5, n=2, max_bucket_size=cap)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert reads.value == 2 * n_docs, (reads.value, n_docs)
+    assert 0 < len(jobs) <= max_jobs, len(jobs)
+
+
+def test_max_partition_bytes_reads_unit_suffixes(spark, tmp_path):
+    """maxPartitionBytes is read in bytes through the session's SQLConf: a
+    unit suffix ('64m') is honoured, not replaced by the 128 MB default,
+    and the split estimate uses it."""
+    import math
+    import os
+
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    path = str(tmp_path / "t.parquet")
+    spark.range(20000).selectExpr(
+        "id", "sha2(cast(id AS string), 256) AS h"
+    ).coalesce(1).write.parquet(path)
+    files = spark.read.parquet(path).inputFiles()
+    size = sum(
+        os.path.getsize(os.path.join(path, f))
+        for f in os.listdir(path)
+        if f.endswith(".parquet")
+    )
+    try:
+        spark.conf.set(key, "64m")
+        assert dedup._max_partition_bytes(spark) == 64 * 1024 * 1024
+        assert dedup._input_splits(spark, files, 10**6) == math.ceil(size / (64 << 20))
+        spark.conf.set(key, "1g")
+        assert dedup._max_partition_bytes(spark) == 1 << 30
+        spark.conf.set(key, "64k")
+        assert dedup._input_splits(spark, files, 10**6) == math.ceil(size / (64 << 10)) > 1
+    finally:
+        spark.conf.set(key, prev)

@@ -317,3 +317,22 @@ def test_staged_input_reused_by_resume_then_dropped(spark, dirs, monkeypatch):
     # the crashed run's (a restage would have bumped it)
     assert pre_drop_mtime == [mtime]
     assert not os.path.exists(staged)  # dropped at completion
+
+
+def test_drop_staged_input_matches_names_literally(spark, tmp_path):
+    """Glob metacharacters in the checkpoint path: the staged snapshots are
+    found by literal name, so only this checkpoint's ``_staged_p<N>`` dirs
+    go, and a sibling that the glob ``ck[1]{a,b}_staged_p*`` would have
+    matched survives, as does the checkpoint table itself."""
+    import readur_spark.plans.pipeline as pl
+
+    ckpt = tmp_path / "ck[1]{a,b}"
+    own = [tmp_path / "ck[1]{a,b}_staged_p4", tmp_path / "ck[1]{a,b}_staged_p8"]
+    sibling = tmp_path / "ck1a_staged_p4"
+    for d in [ckpt, sibling, *own]:
+        d.mkdir()
+        (d / "part-0.parquet").write_text("x")
+    pl._drop_staged_input(spark, str(ckpt), "parquet", 4)
+    assert not any(d.exists() for d in own)
+    assert (sibling / "part-0.parquet").exists()
+    assert (ckpt / "part-0.parquet").exists()

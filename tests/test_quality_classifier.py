@@ -147,3 +147,19 @@ def test_duplicate_or_overlapping_ids_raise(spark, labeled):
         train_quality_classifier(pos, neg.unionByName(pos.limit(1)))
     with pytest.raises(ValueError, match="more than once"):
         train_quality_classifier(pos.unionByName(pos.limit(1)), neg)
+
+
+def test_dec15i_accepts_numpy2_scalar_reprs():
+    """Under numpy >= 2 a numpy scalar reprs as ``np.float64(0.5)``, which
+    ``Decimal(repr(x))`` cannot parse. The quantizer must coerce with
+    ``float()`` and give the plain float's integer."""
+    from readur_spark.operators.quality_classifier import _dec15i
+
+    class Np2Float(float):
+        def __repr__(self):
+            return f"np.float64({float(self)!r})"
+
+    assert repr(Np2Float(0.5)) == "np.float64(0.5)"
+    assert _dec15i(Np2Float(0.5)) == _dec15i(0.5) == 5 * 10**14
+    for v in (0.1, -1.0 / 3.0, 2.5e-16, 123.456):
+        assert _dec15i(Np2Float(v)) == _dec15i(v)

@@ -51,7 +51,7 @@ def run_funnel(spark, base, rep: int, cpus: int, seq_len: int = 2048) -> dict:
         interleave_stats,
         materialize_interleaved,
     )
-    from readur_spark.plans.curation import _release_checkpoint
+    from readur_spark.operators.lifecycle import release_checkpoint
 
     sc = spark.sparkContext
     out: dict = {"rep": rep}
@@ -73,7 +73,7 @@ def run_funnel(spark, base, rep: int, cpus: int, seq_len: int = 2048) -> dict:
     out["n_extract_ok"] = n_ok
     out["n_extract_failed"] = extracted.count() - n_ok
     out["wall_extract_s"] = round(time.perf_counter() - t0, 2)
-    _release_checkpoint(docs)
+    release_checkpoint(docs)
 
     # content-fingerprint dedup: one shuffle on the uniform md5 key;
     # keep the smallest doc_id per fingerprint (deterministic, and the
@@ -93,7 +93,7 @@ def run_funnel(spark, base, rep: int, cpus: int, seq_len: int = 2048) -> dict:
     )
     out["n_after_dedup"] = deduped.count()
     out["wall_dedup_s"] = round(time.perf_counter() - t0, 2)
-    _release_checkpoint(extracted)
+    release_checkpoint(extracted)
 
     t0 = time.perf_counter()
     manifest = build_interleaved_sequences(
@@ -155,8 +155,8 @@ def run_funnel(spark, base, rep: int, cpus: int, seq_len: int = 2048) -> dict:
     out["materialize_sig"] = int(sig_row["sig"] or 0)
     out["n_seqs_materialized"] = sig_row["n"]
     out["wall_materialize_s"] = round(time.perf_counter() - t0, 2)
-    _release_checkpoint(manifest)
-    _release_checkpoint(deduped)
+    release_checkpoint(manifest)
+    release_checkpoint(deduped)
 
     out["wall_total_s"] = round(
         sum(v for k, v in out.items() if k.startswith("wall_")), 2

@@ -102,9 +102,9 @@ def main() -> None:
     out["rank_mass"] = round(
         pr.agg(F.sum("rank")).collect()[0][0], 9
     )
-    from readur_spark.plans.curation import _release_checkpoint
+    from readur_spark.operators.lifecycle import release_checkpoint
 
-    _release_checkpoint(pr)
+    release_checkpoint(pr)
 
     stats: dict = {}
     t0 = time.perf_counter()
@@ -112,7 +112,7 @@ def main() -> None:
     pr2.count()
     out["wall_pagerank_earlystop_s"] = round(time.perf_counter() - t0, 2)
     out["earlystop"] = stats
-    _release_checkpoint(pr2)
+    release_checkpoint(pr2)
 
     t0 = time.perf_counter()
     deg = domain_degree_stats(edges)
@@ -156,7 +156,7 @@ def main() -> None:
         out["hyperball_shuffle_bytes_per_round"] = int(
             out["n_edges_distinct"] * (1 << hb_p)
         )
-        _release_checkpoint(hb)
+        release_checkpoint(hb)
 
     hits_iters = int(sys.argv[4]) if len(sys.argv) > 4 else 0
     if hits_iters:
@@ -175,7 +175,7 @@ def main() -> None:
         out["wall_hits_per_iter_s"] = round(
             out["wall_hits_s"] / max(hst.get("iterations_run", 1), 1), 2
         )
-        _release_checkpoint(hb2)
+        release_checkpoint(hb2)
 
     t0 = time.perf_counter()
     comp = domain_components(edges)
